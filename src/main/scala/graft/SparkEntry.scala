@@ -817,7 +817,7 @@ object SparkEntry {
       val feats = Seq("l_quantity", "l_extendedprice", "l_discount")
       val long = Melt.numeric(li, feats, keep = Seq("l_linestatus"))
         .select(col("feature"), col("value"), col("l_linestatus").as("y"))
-      Auc.scoresAuto(long, li.select(col("l_linestatus").as("y")))
+      Auc.scoresAuto(long, li.select(col("l_linestatus").as("y")), new graft.runtime.CacheHandle)
         .select(col("feature"), round(col("score"), 6).as("score"))
         .orderBy("feature")
     }),

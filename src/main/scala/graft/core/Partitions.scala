@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, xxhash64}
 
 /** Parallelism guard for expensive per-row projections (char-bigram
   * explodes, token hashing): when the source arrives UNDER-SPLIT — fewer

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * +Infinity, exactly Spark's NaN-last rule; groupBy upstreams normalize
   * −0.0 to 0.0 so the −0.0 < +0.0 distinction never surfaces).
   *
-  * This is the range-partitioner primitive for VALUE-ordered two-phase
-  * prefix sums when no boundary array is available without an extra job:
-  * the TOP BITS of the image are monotone range buckets for free
+  * This is the bucket key for VALUE-ordered [[graft.core.Prefix]] sums
+  * when no boundary array is available without an extra job: the TOP
+  * BITS of the image are monotone range buckets for free
   * (`shiftright(m, 64 − B)`), unlike a hash (order-destroying) or a
   * quantile probe (a full extra pass). Null → null.
   */

@@ -418,8 +418,11 @@ final case class RocStep(
     val long = Melt
       .numeric(df, preds, keep = Seq(outcome))
       .select(col("feature"), col("value"), col(outcome).cast("string").as("y"))
-    val got = Auc.scoresAuto(long, df.select(col(outcome).cast("string").as("y")))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val handle = new graft.runtime.CacheHandle
+    val got =
+      try Auc.scoresAuto(long, df.select(col(outcome).cast("string").as("y")), handle)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      finally handle.release(blocking = false)
     val scores = preds.map(p => p -> got.get(p).filterNot(_.isNaN))
     val (excluded, warns) =
       StepCommon.select(scores, topP, threshold, cutoff, maximize = true, name)

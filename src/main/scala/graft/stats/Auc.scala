@@ -1,7 +1,6 @@
 package graft.stats
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** ROC AUC per numeric feature vs a categorical outcome
@@ -59,27 +58,14 @@ object Auc {
       .agg(sum("c").as("cnt"), sum(col("tag.isPos") * col("c")).as("cntPos"))
       .cache())
 
-    // TWO-PHASE midranks over the counts table (the spearman shape): a
-    // near-unique feature otherwise cumulates its whole distinct-value set
-    // through ONE window task per (feature, pair). The value's monotone
-    // bit image yields range buckets for free; per-(feature, pair, bucket)
-    // totals cumulate through a tiny window and the within-bucket prefix
-    // windows run in parallel. Exact long sums — midranks bit-identical.
-    val bucketed = byValue.withColumn("__bkt",
-      graft.functions.DoubleBits.bucket(col("value"), 20))
-    val wb = Window.partitionBy("feature", "pair").orderBy("__bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = bucketed.groupBy("feature", "pair", "__bkt").agg(sum("cnt").as("__bc"))
-      .select(col("feature"), col("pair"), col("__bkt"),
-        coalesce(sum("__bc").over(wb), lit(0L)).as("__base"))
-    val wv = Window.partitionBy("feature", "pair", "__bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = bucketed
-      .join(bases, Seq("feature", "pair", "__bkt"))
-      .withColumn(
-        "midrank",
-        col("__base") + coalesce(sum("cnt").over(wv), lit(0L)) + (col("cnt") + 1) / 2.0
-      )
+    // midranks two-phase over the counts table (graft.core.Prefix, the
+    // spearman shape): a near-unique feature otherwise cumulates its whole
+    // distinct-value set through ONE window task per (feature, pair).
+    val ranked = graft.core.Prefix
+      .exclusiveSum(byValue, Seq("feature", "pair"),
+        graft.functions.DoubleBits.bucket(col("value"), 20), Seq(col("value")), col("cnt"),
+        "__before", maxBuckets = 1 << 20)
+      .withColumn("midrank", col("__before") + (col("cnt") + 1) / 2.0)
 
     ranked
       .groupBy("feature", "pair")
@@ -99,8 +85,11 @@ object Auc {
   }
 
   /** Convenience: derive the class pairs from the outcome's distinct values
-    * (collected — class cardinality is small by construction). */
-  def scoresAuto(long: DataFrame): DataFrame = scoresAuto(long, long.select("y"))
+    * (collected — class cardinality is small by construction). `handle`
+    * owns the counts cache, as in [[scores]]. */
+  def scoresAuto(long: DataFrame,
+                 handle: graft.runtime.CacheHandle = new graft.runtime.CacheHandle): DataFrame =
+    scoresAuto(long, long.select("y"), handle)
 
   /** [[scoresAuto]] with the class-discovery scan decoupled from the melted
     * table: `ySource` is any single-column frame holding the same outcome
@@ -108,13 +97,14 @@ object Auc {
     * distinct doesn't re-execute the p-fold melt — measured ~0.5 s of the
     * q_auc bench time). The discovered class SET is identical because the
     * melt carries the outcome to every row unchanged. */
-  def scoresAuto(long: DataFrame, ySource: DataFrame): DataFrame = {
+  def scoresAuto(long: DataFrame, ySource: DataFrame,
+                 handle: graft.runtime.CacheHandle): DataFrame = {
     val classes = ySource.toDF("y")
       .select("y").where(col("y").isNotNull).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     require(classes.length >= 2, "ROC needs at least two outcome classes")
     val pairs = for { i <- classes.indices; j <- i + 1 until classes.length }
       yield (classes(i), classes(j))
-    scores(long, pairs)
+    scores(long, pairs, handle)
   }
 }

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   *    tiebreak column so the assignment is deterministic and identical across
   *    engines. NOTE: the rank window runs per feature over DISTINCT values
   *    (tiny for binned/low-cardinality inputs, its regime); near-unique
-  *    columns should use the spearman-style two-phase bucketed prefix.
+  *    columns should use the two-phase [[graft.core.Prefix]] (spearman's
+  *    midranks).
   *  - [[cutpointBins]] — compute exact quantile cut points (one distributed
   *    pass, relativeError = 0), broadcast them, and bin by value comparison.
   *    Fully scalable: no global sort, pure map-side `when` chain. Rows tied
@@ -55,12 +56,12 @@ object Binning {
     // __before and __n in ONE window pass over the counts table — a second
     // aggregation would re-execute the whole upstream scan (Catalyst does
     // not share re-referenced subtrees). Round-6 measurement: the
-    // two-phase bucketed prefix (Correlation.spearmanStats' shape) was
+    // two-phase bucketed prefix (graft.core.Prefix, spearman's shape) was
     // tried here and REVERTED — the entropy-path inputs are binned/
     // low-cardinality, so the counts table is tiny and the per-feature
     // window trivial; the extra checkpoint+exchanges cost ~0.4 s flat.
     // For near-unique columns (where the serial window IS the hazard)
-    // use the spearman pattern.
+    // use graft.core.Prefix.
     val cumTable = counts.select(
       col("feature").as("__f"), col("value").as("__v"),
       coalesce(sum("__cnt").over(wv), lit(0L)).as("__before"),
@@ -102,7 +103,7 @@ object Binning {
     *
     * At any n the driver transfer is the bracket's DISTINCT values; the
     * guard aborts (with a hint) if a pathological value distribution would
-    * exceed `maxCollect` — bounded BEFORE the transfer, TwoPhase-style.
+    * exceed `maxCollect` — bounded BEFORE the transfer (a limit+1 probe).
     * NA handling is PER COLUMN — a null/NaN in one column must not remove
     * the row from another column's statistics (R quantile(na.rm=TRUE)
     * semantics; approxQuantile ignores null/NaN the same way). With
@@ -320,17 +321,16 @@ object Binning {
     *     boundaries only BALANCE the buckets: every output is an exact
     *     rank, so the cuts are identical at any parallelism and for any
     *     boundary set — GK's partition-order dependence cannot leak out;
-    *  3. per-bucket totals → driver cumsum → broadcast rank bases
-    *     (the repo's two-phase prefix-sum pattern);
-    *  4. within-bucket cumulative counts via a value-ordered window
-    *     (parallel across buckets; a pathological boundary collapse makes
-    *     one bucket's window large, never wrong);
-    *  5. a value with cumulative range (lo, hi] carries the targets
+    *  3. per-bucket totals → rank bases, plus within-bucket cumulative
+    *     counts via a value-ordered window ([[graft.core.Prefix]]; parallel
+    *     across buckets — a pathological boundary collapse makes one
+    *     bucket's window large, never wrong);
+    *  4. a value with cumulative range (lo, hi] carries the targets
     *     i ∈ (⌊lo·nbins/n⌋, ⌊hi·nbins/n⌋] — pure integer arithmetic
     *     (no overflow while n·nbins < 2^63), emitted via sequence+explode:
     *     the driver collects exactly the nbins−1 cut values.
     *
-    * Driver transfer: boundaries + bucket totals + the cuts — bounded at
+    * Driver transfer: boundaries + the count n + the cuts — bounded at
     * any n and any distinct-value count. Wide columns run sequentially
     * (the caller quantizes only columns that NEED it). */
   def exactCutsMany(
@@ -343,31 +343,24 @@ object Binning {
     val allBounds = df.stat.approxQuantile(
       cols.toArray, if (bProbs.isEmpty) Array(0.5) else bProbs, 0.01)
     cols.zipWithIndex.map { case (c, ci) =>
-      // the value histogram feeds BOTH the totals job and the pick job —
-      // cache it so the source is scanned once per column, not twice
-      // (re-referenced-subtree rule)
+      // the value histogram feeds BOTH the count job and the pick job (and
+      // the pick job's two prefix phases) — cache it so the source is
+      // scanned once per column (re-referenced-subtree rule)
       val vc = df.select(col(c).cast("double").as("v"))
         .where(col("v").isNotNull && !isnan(col("v")))
         .groupBy("v").agg(count(lit(1)).as("cnt"))
         .cache()
       try {
       val bounds = allBounds(ci).distinct.sorted
-      val bucketed =
-        if (bounds.isEmpty) vc.withColumn("bkt", lit(0))
-        else vc.withColumn("bkt", graft.functions.SortedBucket.of(col("v"), bounds))
-      val totals = bucketed.groupBy("bkt").agg(sum("cnt").as("t"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-      val n = totals.map(_._2).sum
+      val n = vc.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
       if (n == 0L) c -> Array.empty[Double]
       else {
-        val bases = totals.scanLeft((0, 0L)) { case ((_, acc), (b, t)) => (b, acc + t) }
-          .tail.zip(totals).map { case ((b, cumEnd), (_, t)) => (b, cumEnd - t) }
-        val basesDf = df.sparkSession.createDataFrame(bases.toSeq).toDF("bkt", "base")
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("bkt").orderBy("v")
-        val picked = bucketed
-          .join(broadcast(basesDf), "bkt")
-          .withColumn("hi", col("base") + sum("cnt").over(w))
-          .withColumn("lo", col("hi") - col("cnt"))
+        val bucket =
+          if (bounds.isEmpty) lit(0) else graft.functions.SortedBucket.of(col("v"), bounds)
+        val picked = graft.core.Prefix
+          .exclusiveSum(vc, Nil, bucket, Seq(col("v")), col("cnt"), "lo",
+            maxBuckets = bounds.length + 1)
+          .withColumn("hi", col("lo") + col("cnt"))
           .withColumn("iLo", greatest(expr(s"(lo * ${nbins}L) div ${n}L") + 1, lit(1L)))
           .withColumn("iHi", least(expr(s"(hi * ${nbins}L) div ${n}L"), lit(nbins - 1L)))
           .where(col("iHi") >= col("iLo"))

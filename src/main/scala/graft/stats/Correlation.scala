@@ -1,7 +1,6 @@
 package graft.stats
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Correlation-based scores.
@@ -86,40 +85,26 @@ object Correlation {
     // under-split map side (two 0.4 s 3-task stages).
     val src = handle.track(graft.core.Partitions.fanOut(
       df.select(cols.map(c => col(c).cast("double").as(c)): _*)).cache())
-    val counts = graft.core.Melt.numeric(src, cols)
+    // CACHED: the two-phase midrank build references the counts table twice
+    // (bucket totals AND the per-value rank rows) — uncached, the whole
+    // melt + counts groupBy executed twice inside the rank-table build
+    // (visible as two full scan→melt→agg chains in the physical plan)
+    val counts = handle.track(graft.core.Melt.numeric(src, cols)
       .where(col("value").isNotNull)
       .groupBy("feature", "value")
       .agg(count(lit(1)).as("cnt"))
-    // TWO-PHASE midranks over the counts table. The single
-    // Window.partitionBy(feature) this replaces serialized each feature's
-    // whole distinct-value set through ONE task — for a near-unique
-    // outcome that is a |rows|-sized sort on one core at any scale (the
-    // "skew hazard at extreme scale" note in Binning). Here the value's
-    // order-preserving bit image yields monotone range buckets for free
-    // (no quantile probe, no extra job): per-(feature, bucket) totals
-    // cumulate through a TINY per-feature window over bucket rows
-    // (≤ 2^20 rows per feature regardless of data size), bases join
-    // back, and the within-bucket prefix windows run in parallel. The
-    // summed cnt set per value is identical (exact longs), so midranks
-    // are bit-identical to the single-window formulation.
-    // CACHED: referenced twice (the per-value rank rows AND the bases
-    // aggregation) — uncached, the whole melt + counts groupBy executed
-    // twice inside the rank-table build (visible as two full scan→melt→agg
-    // chains in the physical plan)
-    val bucketed = handle.track(
-      counts.withColumn("__bkt", graft.functions.DoubleBits.bucket(col("value"), 20)).cache())
-    val wb = Window.partitionBy("feature").orderBy("__bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = bucketed.groupBy("feature", "__bkt").agg(sum("cnt").as("__bc"))
-      .select(col("feature"), col("__bkt"),
-        coalesce(sum("__bc").over(wb), lit(0L)).as("__base"))
-    val wv = Window.partitionBy("feature", "__bkt").orderBy(col("value"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val rankTable = handle.track(bucketed
-      .join(bases, Seq("feature", "__bkt"))
+      .cache())
+    // midrank(v) = (#rows with value < v) + (ties(v) + 1)/2, two-phase
+    // (graft.core.Prefix): a single Window.partitionBy(feature) would
+    // serialize each feature's whole distinct-value set through ONE task —
+    // for a near-unique outcome a |rows|-sized sort on one core. The
+    // value's order-preserving bit image yields monotone range buckets for
+    // free (no quantile probe, no extra job), ≤ 2^20 per feature.
+    val rankTable = handle.track(graft.core.Prefix
+      .exclusiveSum(counts, Seq("feature"), graft.functions.DoubleBits.bucket(col("value"), 20),
+        Seq(col("value")), col("cnt"), "__before", maxBuckets = 1 << 20)
       .select(col("feature"), col("value"),
-        (col("__base") + coalesce(sum("cnt").over(wv), lit(0L)) +
-          (col("cnt") + 1) / 2.0).as("midrank"))
+        (col("__before") + (col("cnt") + 1) / 2.0).as("midrank"))
       .cache())
     val yRank = rankTable.where(col("feature") === outcome)
       .select(col("value").as("__yv"), col("midrank").as("ry"))

@@ -498,8 +498,7 @@ object Dedup {
     * component (duplicate chains a~b~c must collapse to one kept doc even
     * when a and c were never compared directly).
     *
-    * Hybrid by edge count (the TwoPhase convention of bounded driver
-    * work):
+    * Hybrid by edge count (driver work bounded before any transfer):
     *
     *  - pair sets up to `localEdgeLimit` (default 4M edges ≈ 64 MB of
     *    longs) collect to the driver and resolve by union-find with path
@@ -542,7 +541,7 @@ object Dedup {
     val fwd = handle.track(
       pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
         .distinct().cache())
-    // bounded BEFORE the transfer, TwoPhase-style: ONE limit+1 job both
+    // bounded BEFORE the transfer: ONE limit+1 job both
     // probes the size and ships the edges when they fit — never more than
     // cap+1 rows cross to the driver even on an enormous pair set
     val probe = fwd.limit(localEdgeLimit.toInt + 1).collect()

@@ -155,10 +155,9 @@ object Sampling {
     * key-hash order — the standard shuffle-before-packing step that breaks
     * crawl/source locality in training order. No RNG state; identical at
     * any parallelism; and NO global sort: the hash's top bits range-bucket
-    * the rows (bucket order IS hash order), per-bucket counts are cumulated
-    * driver-side into base offsets (one tiny row per bucket), and ranks are
-    * a parallel within-bucket row_number plus the broadcast base — the same
-    * two-phase prefix-sum shape as [[graft.text.Packing]]. Ties on the hash
+    * the rows (bucket order IS hash order) and the rank is the exclusive
+    * running count in (hash, key) order — [[graft.core.Prefix]], the same
+    * two-phase prefix sum as [[graft.text.Packing]]. Ties on the hash
     * break by the key itself, so ranks are a total order for unique keys. */
   def shuffleRank(df: DataFrame, key: Column, seed: Long = 42L, bucketBits: Int = 12): DataFrame =
     rankByHashOrder(df, xxhash64(key, lit(seed)), key, hashBits = 64, bucketBits)
@@ -175,24 +174,19 @@ object Sampling {
       hashBits: Int,
       bucketBits: Int
   ): DataFrame = {
-    // bucketBits <= 22 bounds the driver-side prefix table at 4M rows (the
-    // same cap TwoPhase enforces); the bucket count here is 2^bucketBits by
-    // construction, never data-dependent
+    // bucketBits <= 22 bounds the bases window at 4M rows (Packing's cap);
+    // the bucket count here is 2^bucketBits by construction, never
+    // data-dependent
     require(bucketBits >= 1 && bucketBits <= 22 && bucketBits < hashBits,
       "bucketBits must be in [1, min(22, hashBits - 1)]")
     // arithmetic (sign-preserving) shift: bucket order equals hash order for
-    // both the signed 64-bit and the non-negative 48-bit hash
-    val withH = df
-      .withColumn("__sh", hash)
-      .withColumn("__sb", shiftright(col("__sh"), hashBits - bucketBits))
-    val baseDf = TwoPhase
-      .prefixBases(withH, col("__sb"), lit(1L), maxBuckets = 1 << bucketBits)
-      .withColumnRenamed("__tp_bkt", "__sb")
-    val w = Window.partitionBy("__sb").orderBy(col("__sh"), tiebreak)
-    withH
-      .join(broadcast(baseDf), "__sb")
-      .withColumn("shuffle_rank", col("__tp_base") + row_number().over(w) - 1)
-      .drop("__sb", "__sh", "__tp_base")
+    // both the signed 64-bit and the non-negative 48-bit hash. The rank is
+    // the exclusive running count (= row_number() - 1) in (hash, key) order.
+    graft.core.Prefix
+      .exclusiveSum(df.withColumn("__sh", hash), Nil,
+        shiftright(col("__sh"), hashBits - bucketBits), Seq(col("__sh"), tiebreak), lit(1L),
+        "shuffle_rank", maxBuckets = 1 << bucketBits)
+      .drop("__sh")
   }
 
   /** Per-domain quota: keep at most `k` rows per `domain`, preferring the
@@ -246,19 +240,19 @@ object Sampling {
     * Rows with null/NaN score are never selected; null token counts weigh
     * 0 (kept for free if their score qualifies).
     *
-    * Scale shape — NO global sort, the same two-phase prefix sum as
-    * [[Packing.packSequences]], but over a VALUE ordering instead of a
-    * dense id: an approxQuantile sketch range-buckets the score (the
-    * boundaries only BALANCE the buckets; every kept row is decided by an
-    * exact prefix sum over the total order, so the result is identical for
-    * any boundary set and any parallelism — GK's partition-order
-    * dependence cannot leak out, the [[graft.stats.Binning.exactCutsMany]]
-    * argument); per-bucket token totals are cumulated driver-side in
-    * descending score order (TwoPhase — transfer bounded at `buckets`
-    * rows) and broadcast back; the within-bucket running sum is a windowed
-    * cumsum partitioned by bucket. Three passes over the source (sketch,
-    * bucket totals, select), each pruned to the score/token input columns
-    * — at corpus scale that beats caching the corpus, and mirrors the
+    * Scale shape — NO global sort, the same two-phase prefix sum
+    * ([[graft.core.Prefix]]) as [[Packing.packSequences]], but over a VALUE
+    * ordering instead of a dense id: an approxQuantile sketch range-buckets
+    * the score (the boundaries only BALANCE the buckets; every kept row is
+    * decided by an exact prefix sum over the total order, so the result is
+    * identical for any boundary set and any parallelism — GK's
+    * partition-order dependence cannot leak out, the
+    * [[graft.stats.Binning.exactCutsMany]] argument); per-bucket token
+    * totals cumulate in descending score order (at most `buckets` rows)
+    * into bucket bases; the within-bucket running sum is a windowed cumsum
+    * partitioned by bucket. Three passes over the source (sketch, bucket
+    * totals, select), each pruned to the score/token input columns — at
+    * corpus scale that beats caching the corpus, and mirrors the
     * documented dedupLines trade-off.
     *
     * Returns the kept rows: the input columns plus `budget_start` (exact
@@ -277,27 +271,25 @@ object Sampling {
       .withColumn("__bs_s", score.cast("double"))
       .withColumn("__bs_t", coalesce(tokens.cast("long"), lit(0L)))
       .where(col("__bs_s").isNotNull && !isnan(col("__bs_s")))
+    graft.core.Prefix
+      .exclusiveSum(valid, Nil, scoreBucket(valid, buckets), Seq(col("__bs_s").desc, id),
+        col("__bs_t"), "budget_start", maxBuckets = buckets)
+      .where(col("budget_start") < budget)
+      .drop("__bs_s", "__bs_t")
+  }
+
+  /** The budget selectors' score range bucket over an approxQuantile
+    * sketch of `__bs_s`, NEGATED: the core cumulates in ascending bucket
+    * order, and the selection consumes tokens from the HIGHEST score
+    * bucket down. */
+  private def scoreBucket(valid: DataFrame, buckets: Int): Column = {
     val bounds =
       if (buckets == 1) Array.empty[Double]
       else valid.stat.approxQuantile(
         "__bs_s", (1 until buckets).map(_.toDouble / buckets).toArray, 0.01)
         .distinct.sorted
-    // negated bucket index: TwoPhase cumulates in ASCENDING key order, and
-    // the selection consumes tokens from the HIGHEST score bucket down
-    val bucketed = valid.withColumn("__bs_b",
-      if (bounds.isEmpty) lit(0L)
-      else -graft.functions.SortedBucket.of(col("__bs_s"), bounds).cast("long"))
-    val baseDf = TwoPhase
-      .prefixBases(bucketed, col("__bs_b"), col("__bs_t"), maxBuckets = buckets)
-      .withColumnRenamed("__tp_bkt", "__bs_b")
-    val w = Window.partitionBy("__bs_b").orderBy(col("__bs_s").desc, id)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(baseDf), "__bs_b")
-      .withColumn("budget_start",
-        col("__tp_base") + coalesce(sum(col("__bs_t")).over(w), lit(0L)))
-      .where(col("budget_start") < budget)
-      .drop("__bs_b", "__bs_s", "__bs_t", "__tp_base")
+    if (bounds.isEmpty) lit(0L)
+    else -graft.functions.SortedBucket.of(col("__bs_s"), bounds).cast("long")
   }
 
   /** Stratified token-budget selection — the DATA-MIXING step: each
@@ -309,14 +301,13 @@ object Sampling {
     * take, boundary doc kept, null/NaN scores never selected, null tokens
     * weigh 0); strata absent from `budgets` are dropped entirely.
     *
-    * Scale shape: the same sketch + two-phase prefix sum, with the
-    * driver cumsum RESET per stratum — the bases table is one row per
-    * occupied (stratum, score-bucket), bounded by construction at
-    * |budgets| × `buckets` rows, and the within-(stratum, bucket) window
-    * keeps every partition small regardless of stratum skew. One shared
-    * boundary set serves all strata (imbalance only unbalances buckets —
-    * the result is exact for any boundary set, the [[budgetSelect]]
-    * argument).
+    * Scale shape: the same sketch + two-phase prefix sum, keyed by stratum
+    * so the cumsum RESETS per stratum — the bases table is one row per
+    * occupied (stratum, score-bucket), at most `buckets` per stratum, and
+    * the within-(stratum, bucket) window keeps every partition small
+    * regardless of stratum skew. One shared boundary set serves all strata
+    * (imbalance only unbalances buckets — the result is exact for any
+    * boundary set, the [[budgetSelect]] argument).
     *
     * Returns the kept rows: the input columns plus `budget_start` (exact
     * tokens preceding the doc within ITS stratum's selection order). */
@@ -331,46 +322,19 @@ object Sampling {
   ): DataFrame = {
     require(budgets.nonEmpty, "budgets must name at least one stratum")
     require(budgets.values.forall(_ >= 1), "every budget must be >= 1 token")
-    require(buckets >= 1 && buckets.toLong * budgets.size <= (1L << 22),
-      "strata x buckets must stay within the bounded driver transfer (2^22)")
-    val spark = df.sparkSession
+    require(buckets >= 1 && buckets <= (1 << 22), "buckets must be in [1, 2^22]")
     val valid = df
       .withColumn("__bs_st", stratum.cast("string"))
       .withColumn("__bs_s", score.cast("double"))
       .withColumn("__bs_t", coalesce(tokens.cast("long"), lit(0L)))
       .where(col("__bs_s").isNotNull && !isnan(col("__bs_s")) &&
         col("__bs_st").isin(budgets.keys.toSeq.map(_.asInstanceOf[Any]): _*))
-    val bounds =
-      if (buckets == 1) Array.empty[Double]
-      else valid.stat.approxQuantile(
-        "__bs_s", (1 until buckets).map(_.toDouble / buckets).toArray, 0.01)
-        .distinct.sorted
-    val bucketed = valid.withColumn("__bs_b",
-      if (bounds.isEmpty) lit(0L)
-      else -graft.functions.SortedBucket.of(col("__bs_s"), bounds).cast("long"))
-    // phase 1: one row per occupied (stratum, bucket) — bounded by
-    // construction; cumsum resets per stratum (TwoPhase is single-keyed,
-    // so the reset lives here, same conventions: nulls impossible by the
-    // filter above, bucket order = descending score)
-    val totals = bucketed.groupBy("__bs_st", "__bs_b")
-      .agg(sum(col("__bs_t")).as("__w"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
-    val bases = totals.groupBy(_._1).toSeq.flatMap { case (st, rows) =>
-      var acc = 0L
-      rows.sortBy(_._2).map { case (_, b, w) => val out = (st, b, acc); acc += w; out }
-    }
-    val baseDf = spark.createDataFrame(bases).toDF("__bs_st", "__bs_b", "__tp_base")
-    val budgetDf = spark.createDataFrame(budgets.toSeq).toDF("__bs_st", "__budget")
-    val w = Window.partitionBy("__bs_st", "__bs_b")
-      .orderBy(col("__bs_s").desc, id)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    bucketed
-      .join(broadcast(baseDf), Seq("__bs_st", "__bs_b"))
+    val budgetDf = df.sparkSession.createDataFrame(budgets.toSeq).toDF("__bs_st", "__budget")
+    graft.core.Prefix
+      .exclusiveSum(valid, Seq("__bs_st"), scoreBucket(valid, buckets), Seq(col("__bs_s").desc, id),
+        col("__bs_t"), "budget_start", maxBuckets = buckets)
       .join(broadcast(budgetDf), Seq("__bs_st"))
-      .withColumn("budget_start",
-        col("__tp_base") + coalesce(sum(col("__bs_t")).over(w), lit(0L)))
       .where(col("budget_start") < col("__budget"))
-      .drop("__bs_st", "__bs_b", "__bs_s", "__bs_t", "__tp_base", "__budget")
+      .drop("__bs_st", "__bs_s", "__bs_t", "__budget")
   }
 }

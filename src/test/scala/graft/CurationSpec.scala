@@ -826,6 +826,13 @@ class CurationSpec extends AnyFunSuite {
     val totalToks = 300 + 300 + 500 + 124 + 1
     assert(got.values.map(_._1).max + 1 <= totalToks)
     intercept[IllegalArgumentException](Packing.packSequences(docs, "id", "toks", 0))
+    // a null id has no place in the order: abort, never silently drop it
+    val withNullId = Seq((Some(0L), 300L), (None, 5L)).toDF("id", "toks")
+    val e = intercept[Exception](
+      Packing.packSequences(withNullId, "id", "toks", budget = 512).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("the ordering key column contains nulls")),
+      s"expected the null-ordering-key abort, got: $e")
   }
 
   // ---- SimHash multi-table candidate generation -----------------------------

@@ -167,6 +167,69 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("Prefix.exclusiveSum == local per-key running sum across bucket boundaries") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.functions.DoubleBits
+    // values that straddle DoubleBits buckets: ±Inf, NaN, −0.0/0.0 (ties in
+    // Spark's order, adjacent buckets in the core's), subnormals, and small
+    // integers tied across many rows
+    val specials = Seq(Double.NegativeInfinity, Double.PositiveInfinity, Double.NaN, -0.0, 0.0,
+      -Double.MinPositiveValue, Double.MinPositiveValue, -Double.MaxValue, -1.0, 1.0)
+    for (seed <- Seq(21, 22); bits <- Seq(1, 3, 20)) {
+      val rng = new scala.util.Random(seed)
+      val rows = (0L until 400L).map { id =>
+        val key = if (rng.nextInt(3) == 0) "hot" else s"k${rng.nextInt(4)}"
+        val v = rng.nextInt(4) match {
+          case 0 => specials(rng.nextInt(specials.length))
+          case 1 => (rng.nextInt(9) - 4).toDouble
+          case _ => rng.nextGaussian() * 1e3
+        }
+        val w = if (rng.nextInt(10) == 0) None else Some(rng.nextInt(1000) - 200L)
+        (id, key, v, w)
+      }
+      // the model: (bucket, value, id) order is DoubleBits' total order, id
+      // breaking ties; null weights count 0
+      val model = rows.groupBy(_._2).values.flatMap { g =>
+        var acc = 0L
+        g.sortBy(r => (DoubleBits.monotone(r._3), r._1)).map { r =>
+          val before = acc; acc += r._4.getOrElse(0L); r._1 -> before
+        }
+      }.toMap
+      val got = graft.core.Prefix
+        .exclusiveSum(rows.toDF("id", "k", "v", "w").repartition(3), Seq("k"),
+          DoubleBits.bucket(col("v"), bits), Seq(col("v"), col("id")), col("w"), "before",
+          maxBuckets = 1 << bits)
+        .select("id", "before").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == model, s"seed=$seed bits=$bits")
+    }
+  }
+
+  test("Prefix.exclusiveSum aborts in-plan on a null bucket and on a key over maxBuckets buckets") {
+    import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.{col, lit, when}
+    def abortMessage(run: => Any): String = {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+    }
+    def rank(df: DataFrame, keys: Seq[String], bucket: Column, maxBuckets: Int) =
+      graft.core.Prefix.exclusiveSum(df, keys, bucket, Seq(col("x")), lit(1L), "r", maxBuckets)
+        .collect()
+    val df = Seq(("a", 1L), ("a", 2L), ("a", 3L), ("b", 1L), ("b", 2L)).toDF("k", "x")
+    val sparse = "over 2 occupied buckets would be cumulated on the driver"
+    // key "a" occupies 3 buckets, "b" only 2
+    assert(abortMessage(rank(df, Seq("k"), col("x"), 2)).contains(sparse))
+    assert(abortMessage(rank(df, Nil, col("x"), 2)).contains(sparse))
+    assert(rank(df.where(col("k") === "b"), Seq("k"), col("x"), 2).length == 2)
+    assert(rank(df, Seq("k"), col("x"), 3).length == 5)
+    val nullBucket = when(col("x") =!= 2L, col("x"))
+    assert(abortMessage(rank(df, Seq("k"), nullBucket, 8))
+      .contains("the ordering key column contains nulls"))
+    intercept[IllegalArgumentException](rank(df, Nil, col("x"), 0))
+  }
+
   test("counts-based exactCuts == approxQuantile(err=0); quantileType7 == percentile(), bit-for-bit") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}

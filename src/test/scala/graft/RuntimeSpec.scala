@@ -223,6 +223,17 @@ class RuntimeSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"released handles must unpersist every tracked cache: $leaked")
   }
 
+  test("RocStep.fit releases its AUC counts cache: repeated fits leave no persistent RDDs") {
+    val rng = new scala.util.Random(11)
+    val df = (0 until 120).map { i =>
+      (rng.nextGaussian() + i % 3, rng.nextInt(7).toDouble, s"c${i % 3}")
+    }.toDF("f1", "f2", "y")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    (0 until 2).foreach(_ => graft.select.RocStep(topP = Some(1)).fit(df, "y", Seq("f1", "f2")))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RocStep.fit must release every cache it creates: $leaked")
+  }
+
   test("image resize: deterministic nearest-neighbor thumbnails, aspect fit, passthrough") {
     import graft.multimodal.BinaryFeatures
     // 8x4 source: left half red, right half blue
